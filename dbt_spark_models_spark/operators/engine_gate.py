@@ -229,7 +229,7 @@ def engine_merge_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
         incremental_strategy="merge",
         unique_key="o_custkey",
     )
-    materialize(spark, "cust_rollup", _MERGE_SRC, cfg, db, first_run_sql=_MERGE_B1)
+    materialize(spark, "cust_rollup", _MERGE_B1, cfg, db)
     materialize(spark, "cust_rollup", _MERGE_SRC, cfg, db)
     return spark.table(f"{db}.cust_rollup").select(
         "o_custkey",

@@ -2,11 +2,10 @@
 
 Round-8 change (VERDICT r7 "what's wrong" #1): the generated
 ``operators/_graded.py`` cache went stale at the round boundary three
-rounds running because it required a manual ``tools/regen_graded.py``
-step.  The graded set is a pure function of the driver's correctness
-artifacts, so compute it at import time instead — a few ms of JSON
-reads — and the stale-cache class of defect becomes structurally
-impossible.
+rounds running because regenerating it was a manual step.  The graded
+set is a pure function of the driver's correctness artifacts, so
+compute it at import time instead — a few ms of JSON reads — and the
+stale-cache class of defect becomes structurally impossible.
 
 ``graded_rounds()`` returns ``{query_name: round_number}`` where
 ``round_number`` is the LATEST round whose driver row for that name is

@@ -25,12 +25,17 @@ plans a parquet scan over the log's active set.
 from __future__ import annotations
 
 import os
+import weakref
 
 from pyspark.sql import DataFrame, SparkSession
 
 # ident (db.table lowercased) -> table_path, for tooling/tests that need
 # to find the physical table behind a resolved name
 _REGISTRY: dict[str, str] = {}
+
+# SparkContext -> Delta Lake jars present. The classpath is fixed when the
+# JVM starts, so one probe per context answers every later call.
+_DELTA_AVAILABLE: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
 
 
 def qualified(database: str | None, name: str) -> str:
@@ -109,9 +114,21 @@ def read(
     )
 
 
+def _delta_available(spark: SparkSession) -> bool:
+    """True when the Delta Lake jars are on the classpath (import-try)."""
+    sc = spark.sparkContext
+    if sc not in _DELTA_AVAILABLE:
+        try:
+            spark._jvm.java.lang.Class.forName(
+                "org.apache.spark.sql.delta.DeltaLog"
+            )
+            _DELTA_AVAILABLE[sc] = True
+        except Exception:  # noqa: BLE001
+            _DELTA_AVAILABLE[sc] = False
+    return _DELTA_AVAILABLE[sc]
+
+
 def uses_deltalite(spark: SparkSession, config: dict) -> bool:
     """True when this node's tables should route through DeltaLite:
     declared delta, and no Delta Lake jars to honor it natively."""
-    from dbt_spark_models_spark.plans.materialize import _delta_available
-
     return config.get("file_format") == "delta" and not _delta_available(spark)

@@ -47,15 +47,6 @@ def table_exists(spark: SparkSession, database: str | None, name: str) -> bool:
     return spark.catalog.tableExists(_qualify(database, name))
 
 
-def _delta_available(spark: SparkSession) -> bool:
-    """True when the Delta Lake jars are on the classpath (import-try)."""
-    try:
-        spark._jvm.java.lang.Class.forName("org.apache.spark.sql.delta.DeltaLog")
-        return True
-    except Exception:  # noqa: BLE001
-        return False
-
-
 def _layout_for_write(
     df: DataFrame, partition_by: list[str] | None, model_sql: str = ""
 ) -> DataFrame:
@@ -108,13 +99,13 @@ def materialize(
     config: dict[str, Any],
     database: str | None = None,
     full_refresh: bool = False,
-    first_run_sql: str | None = None,
     cdf_txn: dict[str, int] | None = None,
 ) -> MaterializeResult:
     """Execute one model's compiled SQL under its materialization.
 
-    ``sql`` is the incremental-rendered text; ``first_run_sql`` the
-    non-incremental render (used when the target doesn't exist yet).
+    ``sql`` is the model rendered once by the caller, with
+    ``is_incremental()`` true exactly when the target exists and
+    ``full_refresh`` is false — the same test that picks the branch here.
 
     ``cdf_txn`` ({txn appId: upstream version}) carries the Runner's
     ref_changes() consumed-version watermarks INTO the materialization
@@ -136,22 +127,23 @@ def materialize(
         # inlined by ref resolution; nothing to execute
         return MaterializeResult(ident, "ephemeral")
 
-    file_format = config.get("file_format", "parquet")
-    if file_format == "delta" and not _delta_available(spark):
+    from dbt_spark_models_spark.plans import deltalite_tables as dlt
+
+    if dlt.uses_deltalite(spark, config):
         # reference uses delta on 197 configs and depends on its
         # semantics (ACID commits, MERGE, dynamic partition overwrite,
         # time travel). Without the Delta jars those tables route through
         # the bundled DeltaLite implementation instead of silently
         # degrading to parquet (VERDICT r8 #1).
         return _materialize_deltalite(
-            spark, name, sql, config, database, full_refresh, first_run_sql,
-            cdf_txn,
+            spark, name, sql, config, database, full_refresh, cdf_txn
         )
     if cdf_txn:
         raise ValueError(
             f"{name}: CDF watermarks need a DeltaLite commit to ride "
             "(ref_changes() consumers must be file_format='delta')"
         )
+    file_format = config.get("file_format", "parquet")
     partition_by = config.get("partition_by")
     if isinstance(partition_by, str):
         partition_by = [partition_by]
@@ -174,7 +166,7 @@ def materialize(
     if mat == "incremental":
         exists = table_exists(spark, database, name)
         if not exists or full_refresh:
-            return create_as(first_run_sql or sql, "created")
+            return create_as(sql, "created")
         strategy = config.get("incremental_strategy", "insert_overwrite")
         osc = config.get("on_schema_change", "ignore")
         df = _align_columns(spark, spark.sql(sql), ident, osc)
@@ -198,7 +190,9 @@ def materialize(
                 raise ValueError(
                     f"merge source for {name} has duplicate unique_key rows"
                 )
-            if config.get("file_format") == "delta" and _delta_available(spark):
+            # delta reaching here means the jars are present (DeltaLite
+            # took the jar-free case above)
+            if file_format == "delta":
                 tmp = f"__merge_src_{name}"
                 df.createOrReplaceTempView(tmp)
                 on = " AND ".join(f"t.`{k}` = s.`{k}`" for k in keys)
@@ -249,7 +243,6 @@ def _materialize_deltalite(
     config: dict[str, Any],
     database: str | None,
     full_refresh: bool,
-    first_run_sql: str | None,
     cdf_txn: dict[str, int] | None = None,
 ) -> MaterializeResult:
     """``file_format='delta'`` materializations on the bundled DeltaLite
@@ -294,7 +287,7 @@ def _materialize_deltalite(
 
     if mat == "incremental":
         if not exists or full_refresh:
-            return write_full(first_run_sql or sql, "created")
+            return write_full(sql, "created")
         strategy = config.get("incremental_strategy", "insert_overwrite")
         osc = config.get("on_schema_change", "ignore")
         df = _align_columns_deltalite(spark, spark.sql(sql), path, osc)

@@ -75,6 +75,9 @@ class Runner:
         import threading as _threading
 
         self._ddl_lock = _threading.Lock()
+        # source view -> the path it was created over, so each view is
+        # created once per Runner (backfill vars can move the path)
+        self._source_views: dict[str, str] = {}
         # ref_changes() bookkeeping: {consumer: {upstream: version}} of the
         # upstream delta versions a run has READ but not yet recorded —
         # persisted into the consumer's delta log only after its
@@ -169,39 +172,33 @@ class Runner:
             path = str(target).format(**{**self.project.vars, **self.vars})
             # persistent view over the file (temp views can't back
             # persistent model views), with TIMESTAMP(NANOS) columns
-            # converted SQL-side. The db-less TEMP view is session-global,
-            # so two concurrent db-less Runners pointing the same source
-            # name at DIFFERENT paths would clobber each other — the name
-            # carries a path hash to keep them disjoint (same path → same
-            # view → harmless).
+            # converted SQL-side. Db-less Runners share `default`, so two
+            # of them pointing the same source name at DIFFERENT paths
+            # would clobber each other — the name carries a path hash to
+            # keep them disjoint (same path → same view → harmless).
             name = f"src_{schema}_{table}"
             if not self.database:
                 import hashlib as _hashlib
 
                 name += "_" + _hashlib.md5(path.encode()).hexdigest()[:8]
-            view = f"{self.database}.{name}" if self.database else name
-            ns_cols = set(_ns_timestamp_columns(path))
-            fields = self.spark.read.parquet(path).schema.fieldNames()
-            proj = ", ".join(
-                f"timestamp_micros(`{c}` div 1000) AS `{c}`"
-                if c in ns_cols
-                else f"`{c}`"
-                for c in fields
-            )
-            # two threads compiling models over the same source would
-            # race the OR REPLACE — serialize (same-name same-path, so
-            # either order is correct; the lock just prevents the throw)
+            view = f"{self.database or 'default'}.{name}"
+            # check and create under one lock: two threads compiling
+            # models over the same source must not both create it
             with self._ddl_lock:
-                if self.database:
+                if self._source_views.get(view) != path:
+                    ns_cols = set(_ns_timestamp_columns(path))
+                    fields = self.spark.read.parquet(path).schema.fieldNames()
+                    proj = ", ".join(
+                        f"timestamp_micros(`{c}` div 1000) AS `{c}`"
+                        if c in ns_cols
+                        else f"`{c}`"
+                        for c in fields
+                    )
                     self.spark.sql(
                         f"CREATE OR REPLACE VIEW {view} AS"
                         f" SELECT {proj} FROM parquet.`{path}`"
                     )
-                else:
-                    self.spark.sql(
-                        f"CREATE OR REPLACE TEMPORARY VIEW {name} AS"
-                        f" SELECT {proj} FROM parquet.`{path}`"
-                    )
+                    self._source_views[view] = path
             return view
         return str(target)
 
@@ -507,23 +504,20 @@ class Runner:
                     )
                     if dow == int(reload_dow):
                         node_full_refresh = True
-            incremental_now = exists and not node_full_refresh
+            # materialize() re-checks existence and takes the branch
+            # this render was made for
             try:
-                inc_sql = self._compile(node, is_incremental=incremental_now)
+                sql = self._compile(
+                    node, is_incremental=exists and not node_full_refresh
+                )
             except CdfWindowLost:
                 # on_cdf_data_loss='full_refresh': the change window
                 # is gone — rebuild from scratch this run; the
                 # watermark re-seeds at the upstream head inside the
                 # rebuild's own commit (_cdf_txn_for)
                 node_full_refresh = True
-                incremental_now = False
                 self._pending_cdf.pop(name, None)
-                inc_sql = self._compile(node, is_incremental=False)
-            first_sql = (
-                inc_sql
-                if incremental_now
-                else self._compile(node, is_incremental=False)
-            )
+                sql = self._compile(node, is_incremental=False)
             cdf_txn = (
                 self._cdf_txn_for(node)
                 if ("ref_changes" in node.raw_sql or name in self._pending_cdf)
@@ -532,11 +526,10 @@ class Runner:
             res = materialize(
                 self.spark,
                 node_table,
-                inc_sql,
+                sql,
                 node.config,
                 node_db,
                 full_refresh=node_full_refresh,
-                first_run_sql=first_sql,
                 cdf_txn=cdf_txn,
             )
             self._pending_cdf.pop(name, None)
@@ -769,6 +762,26 @@ class Runner:
         from dbt_spark_models_spark.plans.checks import build_check_queries
 
         out = []
+
+        def run_check(name: str, sql_of) -> None:
+            # a check passes when its query returns no rows
+            t0 = time.time()
+            try:
+                n = self.spark.sql(sql_of()).count()
+                out.append(
+                    RunResult(
+                        name,
+                        "test",
+                        "success" if n == 0 else "fail",
+                        seconds=time.time() - t0,
+                        message="" if n == 0 else f"{n} failing rows",
+                    )
+                )
+            except Exception as e:  # noqa: BLE001
+                out.append(
+                    RunResult(name, "test", "error", "", time.time() - t0, str(e))
+                )
+
         for model_name, model_checks in self.project.checks.items():
             # resolve through _identity so checks find models with custom
             # schema/alias configs (prod target) and dev-renamed tables
@@ -785,43 +798,9 @@ class Runner:
             for check_name, sql in build_check_queries(
                 ident, model_checks, self._resolve_ref
             ).items():
-                t0 = time.time()
-                full_name = f"{model_name}__{check_name}"
-                try:
-                    n = self.spark.sql(sql).count()
-                    out.append(
-                        RunResult(
-                            full_name,
-                            "test",
-                            "success" if n == 0 else "fail",
-                            seconds=time.time() - t0,
-                            message="" if n == 0 else f"{n} failing rows",
-                        )
-                    )
-                except Exception as e:  # noqa: BLE001
-                    out.append(
-                        RunResult(
-                            full_name, "test", "error", "", time.time() - t0, str(e)
-                        )
-                    )
+                run_check(f"{model_name}__{check_name}", lambda sql=sql: sql)
         for name, node in self.project.tests.items():
-            t0 = time.time()
-            try:
-                sql = self._compile(node, is_incremental=False)
-                n = self.spark.sql(sql).count()
-                out.append(
-                    RunResult(
-                        name,
-                        "test",
-                        "success" if n == 0 else "fail",
-                        seconds=time.time() - t0,
-                        message="" if n == 0 else f"{n} failing rows",
-                    )
-                )
-            except Exception as e:  # noqa: BLE001
-                out.append(
-                    RunResult(name, "test", "error", "", time.time() - t0, str(e))
-                )
+            run_check(name, lambda node=node: self._compile(node, False))
         return out
 
     def build(self, run_ts: str | None = None, **kw) -> list[RunResult]:
@@ -884,8 +863,6 @@ class Runner:
         ``log_retain_versions`` trims checkpoint-covered commit JSONs
         (the delta.logRetentionDuration twin) so replay stays O(tail)
         over years of dailies."""
-        import time as _time
-
         from dbt_spark_models_spark.plans import deltalite_tables as dlt
         from dbt_spark_models_spark.sources import deltalite
 
@@ -900,7 +877,7 @@ class Runner:
             path = dlt.table_path(self.spark, db, name)
             if deltalite.latest_version(path) is None:
                 continue
-            t0 = _time.time()
+            t0 = time.time()
             try:
                 actions = []
                 if optimize:
@@ -925,7 +902,7 @@ class Runner:
                         node.kind,
                         "success",
                         action="+".join(actions) or "noop",
-                        seconds=round(_time.time() - t0, 3),
+                        seconds=round(time.time() - t0, 3),
                     )
                 )
             except Exception as exc:  # noqa: BLE001 — per-table isolation
@@ -935,7 +912,7 @@ class Runner:
                         node.kind,
                         "error",
                         action="maintain",
-                        seconds=round(_time.time() - t0, 3),
+                        seconds=round(time.time() - t0, 3),
                         message=str(exc),
                     )
                 )
@@ -960,8 +937,6 @@ class Runner:
         partitions; the wholesale swap here is the safe general path (and
         the only correct one when the key is scattered across every
         partition, as user ids usually are)."""
-        import time as _time
-
         from pyspark.sql import functions as _F
 
         out: list[RunResult] = []
@@ -976,10 +951,23 @@ class Runner:
             key_df = keys.toDF("__erase_key").select(
                 _F.col("__erase_key").cast("string").alias("__erase_key")
             )
+
+        def without_keys(df):
+            keys_typed = key_df.select(
+                _F.col("__erase_key").cast(dict(df.dtypes)[column]).alias(
+                    "__erase_key"
+                )
+            )
+            return df.join(
+                _F.broadcast(keys_typed),
+                df[column] == _F.col("__erase_key"),
+                "left_anti",
+            )
+
         for node in nodes:
             db, name = self._identity(node)
             ident = f"{db}.{name}" if db else name
-            t0 = _time.time()
+            t0 = time.time()
             try:
                 from dbt_spark_models_spark.plans import deltalite_tables as dlt
 
@@ -994,17 +982,7 @@ class Runner:
                     df = deltalite.read(self.spark, path)
                     if column not in df.columns:
                         continue
-                    kept = df.join(
-                        _F.broadcast(
-                            key_df.select(
-                                _F.col("__erase_key")
-                                .cast(dict(df.dtypes)[column])
-                                .alias("__erase_key")
-                            )
-                        ),
-                        df[column] == _F.col("__erase_key"),
-                        "left_anti",
-                    )
+                    kept = without_keys(df)
                     pcols = (
                         deltalite._replay_state(path)["meta"].get(
                             "partitionColumns"
@@ -1019,7 +997,7 @@ class Runner:
                             node.kind,
                             "success",
                             action="erase",
-                            seconds=round(_time.time() - t0, 3),
+                            seconds=round(time.time() - t0, 3),
                         )
                     )
                     continue
@@ -1035,17 +1013,7 @@ class Runner:
                 df = self.spark.table(ident)
                 if column not in df.columns:
                     continue
-                kept = df.join(
-                    _F.broadcast(
-                        key_df.select(
-                            _F.col("__erase_key").cast(
-                                dict(df.dtypes)[column]
-                            ).alias("__erase_key")
-                        )
-                    ),
-                    df[column] == _F.col("__erase_key"),
-                    "left_anti",
-                )
+                kept = without_keys(df)
                 staging = f"{ident}__erase_staging"
                 backup = f"{ident}__erase_backup"
                 self.spark.sql(f"DROP TABLE IF EXISTS {staging}")
@@ -1066,7 +1034,7 @@ class Runner:
                         node.kind,
                         "success",
                         action="erase",
-                        seconds=round(_time.time() - t0, 3),
+                        seconds=round(time.time() - t0, 3),
                     )
                 )
             except Exception as exc:  # noqa: BLE001 — per-table isolation
@@ -1076,7 +1044,7 @@ class Runner:
                         node.kind,
                         "error",
                         action="erase",
-                        seconds=round(_time.time() - t0, 3),
+                        seconds=round(time.time() - t0, 3),
                         message=str(exc),
                     )
                 )

@@ -9,6 +9,7 @@ to the driver.
 
 from __future__ import annotations
 
+import functools
 import os
 
 from pyspark.sql import DataFrame, SparkSession
@@ -34,9 +35,6 @@ BROADCAST_TABLES = {"region", "nation", "supplier", "part", "customer"}
 
 def table_path(sf_dir: str, name: str) -> str:
     return os.path.join(sf_dir, f"{name}.parquet")
-
-
-import functools
 
 
 @functools.lru_cache(maxsize=256)

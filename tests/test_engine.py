@@ -3,6 +3,7 @@
 from __future__ import annotations
 
 import os
+import re
 import textwrap
 
 import pytest
@@ -125,8 +126,44 @@ def test_parse_and_dag(runner):
     assert order.index("stg_events") < order.index("daily_event_stats")
 
 
-def test_full_build(spark, runner):
+def test_full_build(spark, runner, monkeypatch):
+    from collections import Counter
+
+    from pyspark.sql import SparkSession
+
+    from dbt_spark_models_spark.plans import jinja
+
+    renders: Counter = Counter()
+    source_views: Counter = Counter()
+    compile_node, sql = jinja.compile_node, SparkSession.sql
+
+    def counting_compile(project, node, *a, **kw):
+        renders[node.name] += 1
+        return compile_node(project, node, *a, **kw)
+
+    def counting_sql(session, query, *a, **kw):
+        m = re.match(
+            r"CREATE OR REPLACE VIEW (\S+) AS .* FROM parquet\.`([^`]+)`",
+            str(query),
+        )
+        if m:
+            source_views[m.groups()] += 1
+        return sql(session, query, *a, **kw)
+
+    monkeypatch.setattr(jinja, "compile_node", counting_compile)
+    monkeypatch.setattr(SparkSession, "sql", counting_sql)
     results = runner.build()
+    monkeypatch.undo()
+    # a first build renders each model and singular test exactly once,
+    # and creates each (source view, path) once per Runner
+    assert renders == Counter(
+        {**dict.fromkeys(runner.project.models, 1),
+         **dict.fromkeys(runner.project.tests, 1)}
+    )
+    events = runner.project.sources["testdata"]["events"]
+    assert source_views == Counter(
+        {(f"{runner.database}.src_testdata_events", events): 1}
+    )
     by_node = {r.node: r for r in results}
     assert by_node["event_types"].status == "success"
     assert by_node["stg_events"].status == "success"
@@ -146,6 +183,47 @@ def test_full_build(spark, runner):
     # ephemeral model was inlined, not materialized
     assert not spark.catalog.tableExists(f"{db}.eph_big_events")
     assert spark.table(f"{db}.big_event_users").count() > 0
+
+
+def test_databaseless_build_views_over_sources(spark, tmp_path, sf_dir):
+    """Without a database, source views and model views land in
+    `default`; a persistent model view over a source must resolve (a TEMP
+    source view there fails with INVALID_TEMP_OBJ_REFERENCE)."""
+    root = tmp_path / "dbless"
+    (root / "models").mkdir(parents=True)
+    (root / "project.yml").write_text(
+        "name: dbless\n"
+        "sources:\n"
+        "  testdata:\n"
+        f"    orders: {sf_dir}/orders.parquet\n"
+    )
+    (root / "models" / "dbless_orders_by_status.sql").write_text(
+        "{{ config(materialized='view') }}\n"
+        "SELECT o_orderstatus, COUNT(*) AS n\n"
+        "FROM {{ source('testdata', 'orders') }} GROUP BY o_orderstatus"
+    )
+
+    def persistent():
+        return {
+            t.name for t in spark.catalog.listTables("default")
+            if not t.isTemporary
+        }
+
+    before = persistent()
+    try:
+        runner = Runner(spark=spark, project=Project.load(str(root)))
+        results = runner.run()
+        assert [(r.node, r.status, r.message) for r in results] == [
+            ("dbless_orders_by_status", "success", "")
+        ]
+        n = spark.table("default.dbless_orders_by_status").agg({"n": "sum"})
+        assert n.first()[0] == spark.read.parquet(
+            f"{sf_dir}/orders.parquet"
+        ).count()
+    finally:
+        for name in persistent() - before:
+            spark.sql(f"DROP VIEW IF EXISTS default.{name}")
+    assert persistent() == before
 
 
 def test_incremental_insert_overwrite(spark, runner):
