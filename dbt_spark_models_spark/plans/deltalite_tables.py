@@ -25,6 +25,7 @@ plans a parquet scan over the log's active set.
 from __future__ import annotations
 
 import os
+import threading
 import weakref
 
 from pyspark.sql import DataFrame, SparkSession
@@ -32,6 +33,11 @@ from pyspark.sql import DataFrame, SparkSession
 # ident (db.table lowercased) -> table_path, for tooling/tests that need
 # to find the physical table behind a resolved name
 _REGISTRY: dict[str, str] = {}
+
+# SparkSession -> {temp view: (table path, head commit identity)} of the
+# snapshot each view was last attached at (temp views are per session)
+_ATTACHED: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
+_ATTACH_LOCKS: dict[str, threading.Lock] = {}
 
 # SparkContext -> Delta Lake jars present. The classpath is fixed when the
 # JVM starts, so one probe per context answers every later call.
@@ -81,12 +87,29 @@ def exists(spark: SparkSession, database: str | None, name: str) -> bool:
 
 def attach(spark: SparkSession, database: str | None, name: str) -> str:
     """(Re)create the temp view over the LATEST committed snapshot and
-    record the ident in the registry. Returns the view name."""
+    record the ident in the registry. Returns the view name.
+
+    Building the view lists every active file (a Spark job once the table
+    holds more than 32), so a view that already reflects the latest
+    commit is kept. The memo key is the head version plus the identity of
+    that commit file: a commit by any writer or process (OPTIMIZE
+    included) adds a version, and a dropped-and-recreated table rewrites
+    the file at a version number it may have had before. VACUUM never
+    removes the head's files, so it needs no re-attach."""
     from dbt_spark_models_spark.sources import deltalite
 
     path = table_path(spark, database, name)
     view = view_name(database, name)
-    deltalite.read(spark, path).createOrReplaceTempView(view)
+    attached = _ATTACHED.setdefault(spark, {})
+    # check, create and record as one step per view: two threads
+    # attaching it at once must not leave the memo newer than the view
+    with _ATTACH_LOCKS.setdefault(view, threading.Lock()):
+        head = deltalite.commit_identity(path)
+        if head is None or attached.get(view) != (path, head) or not (
+            spark.catalog.tableExists(view)
+        ):
+            deltalite.read(spark, path).createOrReplaceTempView(view)
+            attached[view] = (path, head)
     _REGISTRY[qualified(database, name).lower()] = path
     return view
 

@@ -327,7 +327,7 @@ def _align_columns_deltalite(
 
     from dbt_spark_models_spark.sources import deltalite
 
-    committed = deltalite.read(spark, path).schema
+    committed = deltalite.committed_schema(path)
     tgt_names = {f.name for f in committed.fields}
     new_cols = [c for c in df.columns if c not in tgt_names]
     keep_new = (

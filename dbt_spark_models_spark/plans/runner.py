@@ -15,6 +15,7 @@ depend on it (downstream dependents are skipped).
 
 from __future__ import annotations
 
+import hashlib
 import time
 from dataclasses import dataclass, field
 from typing import Any
@@ -25,6 +26,10 @@ from dbt_spark_models_spark.plans import graph, jinja
 from dbt_spark_models_spark.plans.materialize import load_seed, materialize
 from dbt_spark_models_spark.plans.project import Project
 from dbt_spark_models_spark.plans.snapshots import snapshot
+
+
+def _short_hash(text: str) -> str:
+    return hashlib.md5(text.encode()).hexdigest()[:8]
 
 
 class CdfWindowLost(Exception):
@@ -75,8 +80,8 @@ class Runner:
         import threading as _threading
 
         self._ddl_lock = _threading.Lock()
-        # source view -> the path it was created over, so each view is
-        # created once per Runner (backfill vars can move the path)
+        # source view -> the path it was bound to, so each view is bound
+        # once per Runner (backfill vars can move the path)
         self._source_views: dict[str, str] = {}
         # ref_changes() bookkeeping: {consumer: {upstream: version}} of the
         # upstream delta versions a run has READ but not yet recorded —
@@ -165,42 +170,85 @@ class Runner:
         if target is None:
             raise KeyError(f"source({schema!r}, {table!r}) not declared in project.yml")
         if str(target).endswith(".parquet") or "/" in str(target):
-            from dbt_spark_models_spark.sources.testdata import (
-                _ns_timestamp_columns,
-            )
-
             path = str(target).format(**{**self.project.vars, **self.vars})
-            # persistent view over the file (temp views can't back
-            # persistent model views), with TIMESTAMP(NANOS) columns
-            # converted SQL-side. Db-less Runners share `default`, so two
-            # of them pointing the same source name at DIFFERENT paths
-            # would clobber each other — the name carries a path hash to
-            # keep them disjoint (same path → same view → harmless).
+            # persistent view (temp views can't back persistent model
+            # views). Db-less Runners share `default`, so two of them
+            # pointing the same source name at DIFFERENT paths would
+            # clobber each other — the name carries a path hash to keep
+            # them disjoint (same path → same view → harmless).
             name = f"src_{schema}_{table}"
             if not self.database:
-                import hashlib as _hashlib
-
-                name += "_" + _hashlib.md5(path.encode()).hexdigest()[:8]
+                name += "_" + _short_hash(path)
             view = f"{self.database or 'default'}.{name}"
-            # check and create under one lock: two threads compiling
-            # models over the same source must not both create it
+            # check and bind under one lock: two threads compiling
+            # models over the same source must not both bind it
             with self._ddl_lock:
                 if self._source_views.get(view) != path:
-                    ns_cols = set(_ns_timestamp_columns(path))
-                    fields = self.spark.read.parquet(path).schema.fieldNames()
-                    proj = ", ".join(
-                        f"timestamp_micros(`{c}` div 1000) AS `{c}`"
-                        if c in ns_cols
-                        else f"`{c}`"
-                        for c in fields
-                    )
-                    self.spark.sql(
-                        f"CREATE OR REPLACE VIEW {view} AS"
-                        f" SELECT {proj} FROM parquet.`{path}`"
-                    )
+                    self._bind_source(view, path)
                     self._source_views[view] = path
             return view
         return str(target)
+
+    def _bind_source(self, view: str, path: str) -> None:
+        """Point ``view`` at the parquet files under ``path``, once per
+        Runner.
+
+        The files are bound to an external catalog table whose schema
+        is inferred once, at CREATE, and kept in the catalog: queries
+        over it analyze without the schema-inference job a
+        ``parquet.`path``` scan runs on every analysis. The table name
+        hashes the path and the file's parquet schema (a footer read,
+        repeated per Runner), so a file rewritten with another schema
+        binds a new table. The view on top converts TIMESTAMP(NANOS)
+        columns SQL-side.
+
+        Another Runner may be reading either name meanwhile, so neither
+        ever stops resolving: the table is only ever created (an
+        existing one is refreshed, re-listing its files, and a
+        partitioned one re-synced with its directories), and an existing
+        view is redefined by ALTER VIEW, a single catalog update, where
+        CREATE OR REPLACE would drop it and create it again."""
+        from pyspark.errors import AnalysisException
+
+        from dbt_spark_models_spark.sources.testdata import (
+            ns_timestamp_columns,
+            parquet_schema,
+        )
+
+        footer = parquet_schema(path)
+        shape = "" if footer is None else str(footer.remove_metadata())
+        rel = f"{view}__files_{_short_hash(path + chr(0) + shape)}"
+        catalog = self.spark.catalog
+
+        def create(ddl: str, name: str) -> None:
+            try:
+                self.spark.sql(ddl)
+            except AnalysisException:
+                # IF NOT EXISTS is check-then-create in the in-memory
+                # catalog: another Runner may have created it meanwhile
+                if not catalog.tableExists(name):
+                    raise
+
+        if catalog.tableExists(rel):
+            self.spark.sql(f"REFRESH TABLE {rel}")
+        else:
+            create(
+                f"CREATE TABLE IF NOT EXISTS {rel} USING parquet LOCATION '{path}'",
+                rel,
+            )
+        described = self.spark.sql(f"DESCRIBE TABLE {rel}").collect()
+        if any(r.col_name == "# Partition Information" for r in described):
+            self.spark.sql(f"MSCK REPAIR TABLE {rel} SYNC PARTITIONS")
+        ns = set(ns_timestamp_columns(footer))
+        proj = ", ".join(
+            f"timestamp_micros(`{c}` div 1000) AS `{c}`" if c in ns else f"`{c}`"
+            for c in self.spark.table(rel).columns
+        )
+        body = f"SELECT {proj} FROM {rel}"
+        if catalog.tableExists(view):
+            self.spark.sql(f"ALTER VIEW {view} AS {body}")
+        else:
+            create(f"CREATE VIEW IF NOT EXISTS {view} AS {body}", view)
 
     def _compile(self, node, is_incremental: bool) -> str:
         db, table = self._identity(node)
@@ -343,12 +391,7 @@ class Runner:
             changes = deltalite.read_changes(
                 self.spark, up_path, last + 1, v_now
             )
-        import hashlib as _hashlib
-
-        view = (
-            f"cdf_{consumer.name}_{upstream_name}_"
-            + _hashlib.md5(up_path.encode()).hexdigest()[:8]
-        )
+        view = f"cdf_{consumer.name}_{upstream_name}_{_short_hash(up_path)}"
         changes.createOrReplaceTempView(view)
         self._pending_cdf.setdefault(consumer.name, {})[upstream_name] = v_now
         return view
@@ -483,7 +526,8 @@ class Runner:
                 exists = dlt.exists(self.spark, node_db, node_table)
                 if exists:
                     # {{ this }} in incremental SQL resolves to the
-                    # temp view — attach the current snapshot first
+                    # temp view — attach the current snapshot first (a
+                    # no-op when the view already reflects the head)
                     dlt.attach(self.spark, node_db, node_table)
             else:
                 exists = table_exists(self.spark, node_db, node_table)
@@ -893,8 +937,9 @@ class Runner:
                         path, retain_versions=log_retain_versions
                     )
                     actions.append(f"log_cleanup({len(dropped)} commits)")
-                # re-attach: vacuum may have dropped files the previous
-                # temp-view snapshot referenced
+                # OPTIMIZE commits a new version, which the attach picks
+                # up; VACUUM and log cleanup never remove the head's
+                # files, so without a new commit the view is kept
                 dlt.attach(self.spark, db, name)
                 out.append(
                     RunResult(

@@ -49,6 +49,14 @@ _REQUIRED_SQL_CONFS = {
 _PREPARED_SESSIONS: set[int] = set()
 
 
+def _register_functions(spark: SparkSession) -> SparkSession:
+    from dbt_spark_models_spark.functions.registry import register_engine_functions
+
+    register_engine_functions(spark)
+    _PREPARED_SESSIONS.add(id(spark))
+    return spark
+
+
 def ensure_session_confs(spark: SparkSession) -> SparkSession:
     """Apply required dynamic SQL confs + engine functions to ANY session."""
     if id(spark) in _PREPARED_SESSIONS:
@@ -58,11 +66,7 @@ def ensure_session_confs(spark: SparkSession) -> SparkSession:
             spark.conf.set(k, v)
         except Exception:  # noqa: BLE001 — conf may be static on some builds
             pass
-    from dbt_spark_models_spark.functions.registry import register_engine_functions
-
-    register_engine_functions(spark)
-    _PREPARED_SESSIONS.add(id(spark))
-    return spark
+    return _register_functions(spark)
 
 
 def get_spark(
@@ -75,42 +79,30 @@ def get_spark(
 
     On a real cluster, ``master`` comes from spark-submit; locally we
     default to ``local[$SPARK_GRAFT_CPUS or *]``. ``shuffle_partitions``
-    should be ~2-3x total cores on a cluster; locally = cores.
+    (~2-3x total cores on a cluster) overrides the required default of
+    32; ``extra_conf`` overrides anything. The confs go through the
+    builder only: ``getOrCreate`` applies them to a new session and to an
+    existing one alike, so an explicit value is never reset afterwards.
     """
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
     if master is None:
-        master = f"local[{cpus}]"
-    if shuffle_partitions is None:
-        shuffle_partitions = 32 if cpus == "*" else max(int(cpus), 1)
-
-    builder = (
-        SparkSession.builder.appName(app_name)
-        .master(master)
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        # incremental insert_overwrite must replace only touched partitions
-        # (reference: incremental_strategy='insert_overwrite' ×158, SURVEY §2.1)
-        .config("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        # correctness vs DuckDB oracle: parquet timestamps are UTC-naive there
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.parquet.int96RebaseModeInRead", "CORRECTED")
-        # events.parquet carries TIMESTAMP(NANOS) which Spark rejects by
-        # default; read as long and convert in the loader (µs truncation,
-        # matching DuckDB's ns→µs cast)
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        # timestamp[us] sans tz must read as TIMESTAMP (UTC session), not NTZ
-        .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-        .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
-    )
-    for k, v in (extra_conf or {}).items():
+        master = f"local[{os.environ.get('SPARK_GRAFT_CPUS', '*')}]"
+    confs = {
+        **_REQUIRED_SQL_CONFS,
+        "spark.sql.adaptive.coalescePartitions.enabled": "true",
+        "spark.sql.adaptive.skewJoin.enabled": "true",
+        "spark.sql.execution.arrow.pyspark.enabled": "true",
+        "spark.sql.parquet.int96RebaseModeInRead": "CORRECTED",
+        "spark.ui.enabled": "false",
+        "spark.driver.memory": os.environ.get("SPARK_DRIVER_MEMORY", "8g"),
+    }
+    if shuffle_partitions is not None:
+        confs["spark.sql.shuffle.partitions"] = str(shuffle_partitions)
+    confs.update(extra_conf or {})
+    builder = SparkSession.builder.appName(app_name).master(master)
+    for k, v in confs.items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    # engine-level SQL function parity (SURVEY.md §2.11) + required confs
-    # (getOrCreate may have returned an existing session whose builder
-    # confs didn't apply)
-    return ensure_session_confs(spark)
+    # engine-level SQL function parity (SURVEY.md §2.11); the required
+    # confs already came with the builder
+    return spark if id(spark) in _PREPARED_SESSIONS else _register_functions(spark)

@@ -98,6 +98,21 @@ def latest_version(table_path: str) -> int | None:
     return vs[-1] if vs else None
 
 
+def commit_identity(table_path: str) -> tuple | None:
+    """(version, inode, mtime ns, size) of the latest commit file, or None
+    without a log. Commit files are never rewritten in place, so an equal
+    identity means the same table state; a table dropped and recreated
+    up to the same version number gets a different one."""
+    v = latest_version(table_path)
+    if v is None:
+        return None
+    try:
+        st = os.stat(_version_file(table_path, v))
+    except FileNotFoundError:
+        return None
+    return (v, st.st_ino, st.st_mtime_ns, st.st_size)
+
+
 def _checkpoint_file(table_path: str, version: int) -> str:
     return os.path.join(
         _log_path(table_path), f"{version:020d}.checkpoint.parquet"
@@ -1307,6 +1322,14 @@ def read(
     return _scan_active(spark, table_path, meta, kept)
 
 
+def committed_schema(table_path: str) -> StructType:
+    """Logical schema of the latest snapshot, from the log alone: unlike
+    ``read(...).schema`` it plans no scan, so no file is listed."""
+    state = _replay_state(table_path)
+    _assert_readable(state.get("protocol"), table_path)
+    return StructType.fromJson(json.loads(state["meta"]["schemaString"]))
+
+
 # reserved row-address columns used by the deletion-vector machinery
 _DV_FILE_COL = "__dl_file"
 _DV_ROW_COL = "__dl_row"
@@ -1449,8 +1472,9 @@ def merge(
     add(replacements), so readers see pre- or post-merge state, never
     between. Duplicate-key sources are rejected like delta's MERGE.
 
-    Like ``delete``, the rewrite set is PRUNED by stats: a 1-row probe
-    computes the source's min/max per key column, and only active files
+    Like ``delete``, the rewrite set is PRUNED by stats: the 1-row
+    aggregate that checks the source for duplicate keys also computes
+    its min/max per key column, and only active files
     whose key-range stats overlap it are read and rewritten — files that
     provably contain no matched key keep their bytes untouched (at 100 TB
     a merge aligned with the table's clustering touches the handful of
@@ -1469,14 +1493,34 @@ def merge(
     the tombstones on its own schedule."""
     if deletion_vectors and not change_feed:
         raise ValueError("deletion_vectors=True requires change_feed=True")
-    dup = source.groupBy(*keys).count().filter(F.col("count") > 1).limit(1).count()
-    if dup:
-        raise ValueError("merge source has duplicate unique_key rows")
     versions = _list_versions(table_path)
     snap_version = versions[-1]
     state = _replay_state(table_path, snap_version)
     _assert_writable(state.get("protocol"), table_path)
     active, meta = state["active"], state["meta"]
+    schema = StructType.fromJson(json.loads(meta["schemaString"]))
+    types = {f.name: f.dataType for f in schema.fields}
+    missing = [k for k in keys if k not in types]
+    if missing:
+        raise ValueError(f"merge keys {missing} are not table columns")
+    # ONE aggregate over the raw source keys: the duplicate-key check
+    # (delta's MERGE rejects such sources) and the key-range probe of
+    # the stats pruning below. A file can hold a matched key only if,
+    # for EVERY key column, its [min,max] intersects the source's
+    # [min,max] — taken on the keys cast to their committed types, the
+    # values the written files will hold.
+    rng = (
+        source.groupBy(*keys)
+        .count()
+        .agg(
+            F.max("count").alias("dup"),
+            *[F.min(F.col(k).cast(types[k])).alias(f"mn_{k}") for k in keys],
+            *[F.max(F.col(k).cast(types[k])).alias(f"mx_{k}") for k in keys],
+        )
+        .collect()[0]
+    )
+    if (rng["dup"] or 0) > 1:
+        raise ValueError("merge source has duplicate unique_key rows")
     # delta.appendOnly is checked at COMMIT level, not operation level
     # (r6 ADVICE #2): an insert-only merge commits no dataChange removes
     # and no DV repoints, so it is legal on an append-only table — only a
@@ -1487,7 +1531,6 @@ def merge(
         str((meta.get("configuration") or {}).get("delta.appendOnly", "")).lower()
         == "true"
     )
-    schema = StructType.fromJson(json.loads(meta["schemaString"]))
     pcols = meta.get("partitionColumns") or None
     mapping = _column_mapping(meta)
     out_cols = [f.name for f in schema.fields]
@@ -1502,13 +1545,6 @@ def merge(
         *[F.col(f.name).cast(f.dataType).alias(f.name) for f in schema.fields]
     )
     _enforce_constraints(source, meta, "merge source")
-    # 1-row source key-range probe (driver-side O(1)); a file can hold a
-    # matched key only if, for EVERY key column, its [min,max] intersects
-    # the source's [min,max]
-    rng = source.agg(
-        *[F.min(k).alias(f"mn_{k}") for k in keys],
-        *[F.max(k).alias(f"mx_{k}") for k in keys],
-    ).collect()[0]
     overlap: list[tuple] | None = []
     for k in keys:
         mn, mx = rng[f"mn_{k}"], rng[f"mx_{k}"]

@@ -37,30 +37,42 @@ def table_path(sf_dir: str, name: str) -> str:
     return os.path.join(sf_dir, f"{name}.parquet")
 
 
+def parquet_schema(path: str):
+    """pyarrow schema of a parquet file, or of the first parquet file
+    directly inside a directory (footer read only); None when there is
+    none or it can't be read."""
+    try:
+        import pyarrow.parquet as pq
+
+        target = path
+        if os.path.isdir(path):
+            inner = sorted(f for f in os.listdir(path) if f.endswith(".parquet"))
+            if not inner:
+                return None
+            target = os.path.join(path, inner[0])
+        return pq.read_schema(target)
+    except Exception:  # noqa: BLE001
+        return None
+
+
+def ns_timestamp_columns(schema) -> list[str]:
+    """Columns of a pyarrow schema stored as TIMESTAMP(NANOS)."""
+    import pyarrow.types as pat
+
+    return [
+        f.name
+        for f in schema or ()
+        if pat.is_timestamp(f.type) and f.type.unit == "ns"
+    ]
+
+
 @functools.lru_cache(maxsize=256)
 def _ns_timestamp_columns(path: str) -> list[str]:
     """Columns stored as parquet TIMESTAMP(NANOS) (pyarrow inspection).
 
     Cached per path: testdata files are immutable for a session's lifetime
     and every load_tables call probes its tables' schemas."""
-    try:
-        import pyarrow.parquet as pq
-        import pyarrow.types as pat
-
-        target = path
-        if os.path.isdir(path):
-            inner = [f for f in os.listdir(path) if f.endswith(".parquet")]
-            if not inner:
-                return []
-            target = os.path.join(path, inner[0])
-        schema = pq.read_schema(target)
-        return [
-            f.name
-            for f in schema
-            if pat.is_timestamp(f.type) and f.type.unit == "ns"
-        ]
-    except Exception:  # noqa: BLE001
-        return []
+    return ns_timestamp_columns(parquet_schema(path))
 
 
 def read_parquet_normalized(spark: SparkSession, path: str) -> DataFrame:

@@ -74,3 +74,31 @@ def test_suite_never_touches_committed_bench_detail():
     assert 'json.dump' in src and '"BENCH_DETAIL.run.json"' in src
     with open(os.path.join(REPO, ".gitignore")) as f:
         assert "BENCH_DETAIL.run.json" in f.read()
+
+
+def test_honest_rebase_keyed_on_baseline_content(tmp_path):
+    """HONEST_REBASED follows the r02 artifact's content, not its file
+    name: a renamed copy is still rebased, and a different file named
+    BENCH_r02.json is not."""
+    import json
+    import shutil
+
+    sys.path.insert(0, REPO)
+    from tools.benchgate import HONEST_REBASED, load_baseline
+
+    r02 = os.path.join(REPO, "BENCH_r02.json")
+    copy = tmp_path / "baseline_copy.json"
+    shutil.copyfile(r02, copy)
+    rebased = load_baseline(str(copy))["queries"]
+    assert all(rebased[k] == v for k, v in HONEST_REBASED.items())
+
+    with open(r02) as f:
+        doc = json.load(f)
+    other_dir = tmp_path / "other"
+    other_dir.mkdir()
+    other = other_dir / "BENCH_r02.json"
+    other.write_text(json.dumps(doc, indent=1))
+    kept = load_baseline(str(other))["queries"]
+    original = load_baseline(r02)
+    assert kept != original["queries"]
+    assert all(kept[k] != v for k, v in HONEST_REBASED.items() if k in kept)

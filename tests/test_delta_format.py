@@ -284,3 +284,95 @@ def test_on_schema_change_append_new_columns_delta(spark):
     df2 = dlt.read(spark, db, "t")
     assert "other" not in df2.columns
     assert df2.count() == 3
+
+
+# --- one table scan per table state -------------------------------------
+
+
+def test_day2_insert_overwrite_attaches_once(spark, sf_dir, monkeypatch):
+    """A day-2 run of a delta insert_overwrite model builds its table scan
+    and attaches its temp view once, after its own commit: the view of
+    the day-1 commit is still current before it, and the committed schema
+    comes from the log."""
+    db = "dl_attach_once"
+    _fresh_db(spark, db)
+    project = Project.load(EXAMPLE)
+
+    def run(cutoff):
+        r = Runner(
+            spark=spark, project=project, database=db,
+            vars={"sf_dir": sf_dir, "cutoff_date": cutoff},
+        )
+        res = r.run(names=["stg_orders", "orders_monthly"])
+        assert all(x.status == "success" for x in res), res
+
+    run("1996-01-01")
+    path = dlt.table_path(spark, db, "orders_monthly")
+    view = dlt.view_name(db, "orders_monthly")
+    scans, attaches = [], []
+    frame = type(spark.range(1))  # the session's DataFrame class
+    read, create_view = deltalite.read, frame.createOrReplaceTempView
+
+    def counting_read(session, table_path, *a, **kw):
+        if table_path == path:
+            scans.append(table_path)
+        return read(session, table_path, *a, **kw)
+
+    def counting_view(df, name):
+        if name == view:
+            attaches.append(name)
+        return create_view(df, name)
+
+    monkeypatch.setattr(deltalite, "read", counting_read)
+    monkeypatch.setattr(frame, "createOrReplaceTempView", counting_view)
+    run("1995-07-01")
+    monkeypatch.undo()
+    assert (len(scans), len(attaches)) == (1, 1)
+    assert deltalite.describe_history(path)[0]["operation"] == (
+        "OVERWRITE_PARTITIONS"
+    )
+    assert spark.table(view).count() == dlt.read(spark, db, "orders_monthly").count()
+
+
+def test_this_sees_commits_made_outside_the_runner(spark, tmp_path):
+    """{{ this }} of an incremental delta model reflects the table's
+    latest commit whoever made it: a materialize() call outside the
+    Runner, a writer that attaches no view (another process), and a
+    table dropped and recreated up to the same version number."""
+    root = tmp_path / "counter"
+    (root / "models").mkdir(parents=True)
+    (root / "project.yml").write_text("name: counter\n")
+    (root / "models" / "counter.sql").write_text(
+        "{{ config(materialized='incremental', incremental_strategy='append',"
+        " file_format='delta') }}\n"
+        "{% if is_incremental() %}\n"
+        "SELECT MAX(n) + 1 AS n FROM {{ this }}\n"
+        "{% else %}\n"
+        "SELECT 1 AS n\n"
+        "{% endif %}"
+    )
+    db = "dl_this_outside"
+    _fresh_db(spark, db)
+    project = Project.load(str(root))
+    cfg = dict(
+        materialized="incremental", incremental_strategy="append", file_format="delta"
+    )
+    path = dlt.table_path(spark, db, "counter")
+
+    def run_max():
+        res = Runner(spark=spark, project=project, database=db).run()
+        assert [(r.node, r.status) for r in res] == [("counter", "success")], res
+        return dlt.read(spark, db, "counter").agg(F.max("n")).first()[0]
+
+    assert run_max() == 1
+    assert run_max() == 2
+    materialize(spark, "counter", "SELECT 10 AS n", cfg, db)
+    assert run_max() == 11
+    deltalite.write(spark, spark.sql("SELECT 100 AS n"), path, "append")
+    assert run_max() == 101
+    head = deltalite.latest_version(path)
+    shutil.rmtree(path)
+    for n in range(head + 1):
+        deltalite.write(spark, spark.sql(f"SELECT {1000 + n} AS n"), path, "append")
+    assert deltalite.latest_version(path) == head
+    assert run_max() == 1000 + head + 1

@@ -141,13 +141,22 @@ def test_full_build(spark, runner, monkeypatch):
         renders[node.name] += 1
         return compile_node(project, node, *a, **kw)
 
+    relation_paths: dict[str, str] = {}
+
     def counting_sql(session, query, *a, **kw):
-        m = re.match(
-            r"CREATE OR REPLACE VIEW (\S+) AS .* FROM parquet\.`([^`]+)`",
+        # a source view sits over a catalog table bound to the path
+        rel = re.match(
+            r"CREATE TABLE IF NOT EXISTS (\S+) USING parquet LOCATION '([^']+)'",
             str(query),
         )
-        if m:
-            source_views[m.groups()] += 1
+        if rel:
+            relation_paths[rel.group(1)] = rel.group(2)
+        view = re.match(
+            r"(?:CREATE VIEW IF NOT EXISTS|ALTER VIEW) (\S+) AS .* FROM (\S+)$",
+            str(query),
+        )
+        if view and view.group(2) in relation_paths:
+            source_views[view.group(1), relation_paths[view.group(2)]] += 1
         return sql(session, query, *a, **kw)
 
     monkeypatch.setattr(jinja, "compile_node", counting_compile)
@@ -221,10 +230,178 @@ def test_databaseless_build_views_over_sources(spark, tmp_path, sf_dir):
             f"{sf_dir}/orders.parquet"
         ).count()
     finally:
+        # the source view and the model view, then the catalog table the
+        # source view reads
+        views = {
+            t.name for t in spark.catalog.listTables("default")
+            if not t.isTemporary and t.tableType == "VIEW"
+        }
         for name in persistent() - before:
-            spark.sql(f"DROP VIEW IF EXISTS default.{name}")
+            kind = "VIEW" if name in views else "TABLE"
+            spark.sql(f"DROP {kind} IF EXISTS default.{name}")
     assert persistent() == before
 
+
+def test_source_name_resolves_while_runners_rebind_it(spark, tmp_path, sf_dir):
+    """Db-less Runners over the same file share one source view. While
+    several threads bind it from new Runners at once (first a create
+    race, then a redefinition per Runner), queries over the view from
+    other threads keep resolving: the view is redefined in place, never
+    dropped and created again."""
+    import sys
+    import threading
+
+    root = tmp_path / "rebind"
+    (root / "models").mkdir(parents=True)
+    (root / "project.yml").write_text(
+        "name: rebind\n"
+        "sources:\n"
+        "  testdata:\n"
+        f"    orders: {sf_dir}/orders.parquet\n"
+    )
+
+    def persistent():
+        return {
+            t.name: t.tableType for t in spark.catalog.listTables("default")
+            if not t.isTemporary
+        }
+
+    before = persistent()
+    views: list[str] = []
+    errors: list[BaseException] = []
+    binding = threading.Event()
+
+    def bind():
+        try:
+            for _ in range(4):
+                runner = Runner(spark=spark, project=Project.load(str(root)))
+                views.append(runner._resolve_source("testdata", "orders"))
+        except BaseException as e:  # noqa: BLE001 — reported below
+            errors.append(e)
+
+    def query():
+        try:
+            while binding.is_set():
+                if views:
+                    spark.sql(f"SELECT COUNT(*) FROM {views[0]}")
+        except BaseException as e:  # noqa: BLE001 — reported below
+            errors.append(e)
+
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    binding.set()
+    binders = [threading.Thread(target=bind) for _ in range(6)]
+    readers = [threading.Thread(target=query) for _ in range(2)]
+    try:
+        for t in binders + readers:
+            t.start()
+        for t in binders:
+            t.join(timeout=300)
+        binding.clear()
+        for t in readers:
+            t.join(timeout=60)
+    finally:
+        binding.clear()
+        sys.setswitchinterval(interval)
+        for name, kind in persistent().items():
+            if name not in before:
+                kind = "VIEW" if kind == "VIEW" else "TABLE"
+                spark.sql(f"DROP {kind} default.{name}")
+    assert not any(t.is_alive() for t in binders + readers)
+    assert errors == []
+    assert len(views) == 24 and len(set(views)) == 1
+
+
+def test_queries_over_source_views_launch_no_job(spark, tmp_path, sf_dir):
+    """Once a Runner has bound a source, analyzing a model over it reads
+    the schema from the catalog: neither `spark.sql(<compiled model>)`
+    nor a query of the model view runs a Spark job (a `parquet.`path``
+    scan infers the file schema with a job on every analysis)."""
+    root = tmp_path / "nojob"
+    (root / "models").mkdir(parents=True)
+    (root / "project.yml").write_text(
+        "name: nojob\n"
+        "sources:\n"
+        "  testdata:\n"
+        f"    orders: {sf_dir}/orders.parquet\n"
+    )
+    (root / "models" / "orders_by_status.sql").write_text(
+        "{{ config(materialized='view') }}\n"
+        "SELECT o_orderstatus, COUNT(*) AS n\n"
+        "FROM {{ source('testdata', 'orders') }} GROUP BY o_orderstatus"
+    )
+    db = "nojob_test"
+    spark.sql(f"DROP DATABASE IF EXISTS {db} CASCADE")
+    runner = Runner(spark=spark, project=Project.load(str(root)), database=db)
+    results = runner.run()
+    assert [(r.node, r.status) for r in results] == [
+        ("orders_by_status", "success")
+    ]
+    compiled = runner._compile(runner.project.models["orders_by_status"], False)
+    sc = spark.sparkContext
+    group = "test_queries_over_source_views_launch_no_job"
+    sc.setJobGroup(group, "analysis only")
+    try:
+        spark.sql(compiled)
+        spark.sql(f"SELECT * FROM {db}.orders_by_status")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+    assert spark.sql(compiled).count() == spark.read.parquet(
+        f"{sf_dir}/orders.parquet"
+    ).select("o_orderstatus").distinct().count()
+
+
+
+def test_source_files_relisted_per_runner(spark, tmp_path):
+    """A source bound to a catalog table still tracks its files: a later
+    Runner sees a file added to a directory source and a new partition of
+    a hive-partitioned one, and a source rewritten with another schema
+    binds a new table (the view follows it)."""
+    flat, parted, wide = tmp_path / "flat", tmp_path / "parted", tmp_path / "wide"
+    spark.range(3).write.parquet(str(flat))
+    spark.range(4).selectExpr("id", "id % 2 AS p").write.partitionBy("p").parquet(
+        str(parted)
+    )
+    spark.range(2).write.parquet(str(wide))
+    root = tmp_path / "relist"
+    (root / "models").mkdir(parents=True)
+    (root / "project.yml").write_text(
+        "name: relist\n"
+        "sources:\n"
+        "  raw:\n"
+        f"    flat: {flat}\n"
+        f"    parted: {parted}\n"
+        f"    wide: {wide}\n"
+    )
+    for name in ("flat", "parted", "wide"):
+        (root / "models" / f"n_{name}.sql").write_text(
+            "{{ config(materialized='view') }}\n"
+            f"SELECT * FROM {{{{ source('raw', '{name}') }}}}"
+        )
+    db = "relist_test"
+    spark.sql(f"DROP DATABASE IF EXISTS {db} CASCADE")
+
+    def build():
+        runner = Runner(spark=spark, project=Project.load(str(root)), database=db)
+        assert all(r.status == "success" for r in runner.run())
+        return {
+            name: spark.table(f"{db}.n_{name}")
+            for name in ("flat", "parted", "wide")
+        }
+
+    first = build()
+    assert [first[n].count() for n in ("flat", "parted", "wide")] == [3, 4, 2]
+    spark.range(3, 5).write.mode("append").parquet(str(flat))
+    spark.range(4, 6).selectExpr("id", "7 AS p").write.mode("append").partitionBy(
+        "p"
+    ).parquet(str(parted))
+    spark.range(2).selectExpr("id", "id * 10 AS extra").write.mode(
+        "overwrite"
+    ).parquet(str(wide))
+    again = build()
+    assert [again[n].count() for n in ("flat", "parted", "wide")] == [5, 6, 2]
+    assert again["wide"].columns == ["id", "extra"]
 
 def test_incremental_insert_overwrite(spark, runner):
     runner.build()
